@@ -26,56 +26,6 @@ def entry(spark: SparkSession) -> DataFrame:
     return QUERIES["aws_tti_top10"](spark, "/root/testdata/sf0.001")
 
 
-# The driver checks only ~50 registry queries per round, so `queries()`
-# front-loads by driver-row staleness. Since round 6 the order is
-# COMPUTED from the CORRECTNESS_r*.json rows at import time
-# (`_staleness_order`: non-green/never-checked first, then green rows
-# oldest-round-first) — self-maintaining across rounds with no manual
-# re-derivation. The static list below is the FALLBACK when no
-# correctness files are readable; it snapshots the round-6 computation:
-# the fixed round-5 red row ``docs_select_token_budget`` (oracle
-# window-SUM now CAST AS BIGINT) first, then the 34 r03-stale queries,
-# then the 44 r04-stale queries. Registry FROZEN at 128 per round-5
-# VERDICT #3.
-_FRONT_R6 = [
-    # round-5 red row, fixed (VERDICT r5 #1) — must be re-checked first
-    "docs_select_token_budget",
-    # latest driver row r03 (two rounds stale)
-    "dbt_time_bucket_rollup", "dbt_weekly_volume_rank", "dedup_clusters_star",
-    "docs_eval_contamination", "docs_repetition_score",
-    "embed_knn_ivf_nprobe", "events_asof_latest_order",
-    "events_cube_type_day", "events_latest_per_user",
-    "events_next_type_transitions", "events_props_json",
-    "events_range_join_clicks", "events_rollup_daily", "events_salted_rollup",
-    "events_scd2_intervals", "events_sessionize", "events_type_normalize",
-    "events_value_hour_corr", "multimodal_image_features",
-    "orders_above_customer_avg", "orders_asof_window",
-    "orders_with_bigticket_items", "snowflake_lottr_pivot",
-    "snowflake_lottr_trend", "star_customers_without_orders",
-    "star_nation_rank_global", "star_nation_revenue_share",
-    "star_orders_between", "star_part_buckets", "star_pricing_summary",
-    "star_priority_bigorder_rate", "star_region_revenue",
-    "star_top_orders_by_revenue", "star_union_segments",
-    # latest driver row r04 (one round stale)
-    "aws_pti_top10", "aws_tti_top10", "azure_severity_top10",
-    "azure_variability_top10", "bq_tti_trend_lag", "dbt_fk_orphans",
-    "dbt_outlier_3sigma", "dbt_profile_events", "dbt_stg_volume_clean",
-    "dedup_clusters", "dedup_embed_cosine", "dedup_exact",
-    "dedup_minhash_lsh", "dedup_minhash_sweep", "dedup_ngram_jaccard",
-    "dedup_simhash", "dedup_simhash_pairs", "docs_length_band",
-    "docs_mixture_sample", "docs_pack_chunks", "docs_sample_stratified",
-    "docs_split_assign", "docs_unigram_score", "embed_knn_blas",
-    "embed_knn_brute", "embed_knn_ivf", "embed_knn_ivf_sweep",
-    "embed_label_centroids", "embed_normalize_quantize",
-    "events_gap_fill_hourly", "events_rolling_7d", "events_salted_dim_join",
-    "events_value_ntiles", "events_zscore_hourly",
-    "multimodal_audio_features", "multimodal_frame_fingerprints",
-    "text_bigram_top", "text_fingerprint", "text_lang_id", "text_quality",
-    "text_tfidf_top_terms", "text_token_stats", "text_tokens_bpe",
-    "text_vocab_top",
-]
-
-
 def _query_files(names) -> dict[str, set[str]]:
     """Repo-relative source files implementing each registry query: the
     callable's defining file plus that file's one-hop package-internal
@@ -234,7 +184,7 @@ def _staleness_order(names) -> list[str] | None:
     current one — then (3) green-and-unchanged queries oldest-row-first,
     then name. A query with no row at all sorts with group (1). Returns
     None when no correctness files are readable (first round / foreign
-    checkout) so the static fallback applies."""
+    checkout)."""
     import glob
     import json
     import os
@@ -287,7 +237,10 @@ def _staleness_order(names) -> list[str] | None:
 
 
 def _ordered(d: dict) -> dict:
-    order = _staleness_order(list(d)) or [k for k in _FRONT_R6 if k in d]
+    """The driver checks only ~50 registry queries per round, so front
+    them by driver-row staleness; with no correctness files readable,
+    registry order stands."""
+    order = _staleness_order(list(d)) or []
     front = {k: d[k] for k in order if k in d}
     return front | {k: v for k, v in d.items() if k not in front}
 

@@ -1,106 +1,62 @@
 #!/usr/bin/env python
-"""Benchmark harness: runs every contract query at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints the
-full JSON record {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec, ...}, "streaming": [tagged names],
-"streaming_total": sec, "batch_total": sec, "sf": N} followed by a FINAL
+"""Benchmark harness: runs every driver-facing contract query at
+$SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
+local[$SPARK_GRAFT_CPUS] and reports the sum of raw per-query medians.
+
+Output: the full JSON record {"metric": ..., "value": total_sec,
+"unit": "sec", "queries": {name: sec, ...}, "streaming": [tagged names],
+"streaming_total": sec, "batch_total": sec, "sf": N, ...} is printed and
+persisted to BENCH_detail.json at the repo root, followed by a FINAL
 compact JSON line (same headline keys, slowest-queries subset) sized to
 survive the driver's last-2000-bytes stdout capture — the full-registry
-line is ~4 KB and was arriving left-truncated ("parsed": null in
-BENCH_r02–r05). The complete record is also persisted to
-BENCH_detail.json at the repo root on every run. Streaming queries carry
-fixed micro-batch/sink start-stop overhead that is not
-data-proportional — their subtotal is split out so the batch engine's
-per-query mean stays comparable as the registry grows, and the fixed
-cost itself is MEASURED each run ("streaming_fixed_overhead": a 1-row
-no-op through the identical staged-parquet/availableNow/memory-sink
-harness, best of two) so streaming_total decomposes into
-~7 x fixed + data-proportional work.
+line is ~4 KB and would arrive left-truncated.
 
-Variance control (round 9): per-round suite totals had been swinging
-98–132 s on identical-or-better code because each query was timed ONCE
-on a shared host. The harness now runs up to $SPARK_GRAFT_BENCH_REPS
-(default 3) full warmed passes over the registry and reports the
-per-query MEDIAN (min when only 2 reps fit, the single sample when 1);
-every raw sample lands in BENCH_detail.json under "spread" so a future
-regression call can see whether a number rides on one noisy rep.
-"reps_completed" records how many passes actually ran. A fixed-cost
-CALIBRATION query (count over the 5-row region table, best-of-2) is
-timed before EVERY pass and after the last (round 12 — previously only
-first/last, which smeared mid-run load drift across the whole run); its
-drift measures machine load independently of the engine
-("calibration": {"first", "last", "samples", "spread"}), and
-"queries_norm"/"value_norm" report per-query medians with each raw
-sample rescaled by its pass's calibration bracket toward the
-least-loaded state — the diagnostic for "does this regression track
-host load", while the raw median stays the headline.
+Timing method:
 
-Round 16 (verdict #1): the round-12 probe is single-threaded, so it
-sat flat through r15's +9.6% window — a co-tenant competing for CORES
-doesn't slow a 1-core count. A second, MULTI-CORE calibration leg now
-brackets every pass: a fixed-work 32-partition scan->shuffle->agg
-micro-query shaped like the suite's hot loop, so its drift measures
-whole-machine contention the way the queries experience it.
-"value_norm"/"queries_norm" are defined against the multi-core
-brackets from r16 on; the single-thread normalization is retained as
-"value_norm_st"/"queries_norm_st" for continuity with r12-r15 records.
-"value_norm_abs" additionally normalizes against a PINNED idle-host
-reference for the fixed-work probe (REF_MC_IDLE) — min-of-own-run
-normalization cannot correct a window that was loaded throughout
-(the r15 failure mode); the absolute form is comparable across windows
-on this host no matter when the load struck.
+- each query is fully executed through the noop sink (computes every
+  row, writes nothing), so timings measure the real plan, not a count
+  shortcut; checkpoint blocks a query leaves behind are freed between
+  samples;
+- three warm-ups (flagship query, python workers, text/hash expression
+  paths) run first so no query is charged one-time JIT/startup cost;
+- up to $SPARK_GRAFT_BENCH_REPS (default 3) full passes over the
+  registry; a query's value is its MEDIAN at >=3 samples, else its best
+  sample (noise only ever inflates). Every raw sample is kept under
+  "spread" and "reps_completed" records how many passes ran;
+- streaming queries are sampled on the first pass only: their wall time
+  is dominated by fixed micro-batch/sink start-stop cost, which is
+  measured separately ("streaming_fixed_overhead": a 1-row no-op
+  through the identical staged-parquet/availableNow/memory-sink
+  harness, best of two), so streaming_total decomposes into
+  ~7 x fixed + data-proportional work and is reported apart from
+  batch_total;
+- the next pass starts only if seconds-since-process-start +
+  1.5 x last-pass-duration <= $SPARK_GRAFT_BENCH_DEADLINE (default 545:
+  the external driver kills bench ~580 s after process start, and that
+  budget covers session spin-up and warm-ups too; 1.5x is the margin
+  for a host that slows mid-pass).
 
-Fitting 3 passes inside the driver timeout (round 11 — the r10 driver
-run degraded to min-of-2 on a loaded host, which is how a phantom +10%
-total appeared):
+``SPARK_GRAFT_BENCH_ONLY=q1,q2`` restricts the registry; subset records
+are tagged ``metric: contract_suite_runtime_subset`` so they can never
+be read as suite totals.
 
-- streaming queries are sampled on the FIRST pass only. Their wall time
-  is dominated by fixed micro-batch/sink start-stop cost that is
-  measured separately anyway ("streaming_fixed_overhead"), their
-  subtotal is already reported apart from the batch engine, and
-  robust() takes min-of under 3 samples regardless — so re-paying ~17 s
-  of sink spin-up per extra pass bought no statistical power. Their
-  "spread" entries record the single sample honestly.
-- the old indirect budget rule ($SPARK_GRAFT_BENCH_BUDGET "360 s +
-  one straggler pass") is replaced by an explicit DEADLINE projection:
-  the next pass starts only if seconds-since-process-start +
-  1.5 x last-pass-duration <= $SPARK_GRAFT_BENCH_DEADLINE (default
-  545 — the external driver kills bench at ~580 s counted from process
-  start, and elapsed-from-start also covers session spin-up and
-  warmups, which the old budget silently excluded). The 1.5x factor is
-  the host-slowdown margin; a host that degrades >1.5x mid-pass was
-  never safe under the old rule either.
-
-Round 17 (verdict #1/#2): the r16 brackets detect load but integrate it
-poorly — they are POINT samples, so a lull at one bracket hides
-sustained contention (the r16 window-B validation: 16 hogs, raw 230.4
-corrected only to 214.7 vs true ~104.5). A background CPU sampler
-(1 Hz, /proc/stat total-busy minus this process tree's jiffies — zero
-Spark work, so it cannot perturb the timed queries) now integrates
-EXTERNAL busy cores over each pass, and ``value_norm_abs`` divides each
-sample by its pass's measured slowdown. The window is CLASSIFIED first
-(``classify_load``): spin/CPU load (high external jiffies) is corrected
-by the series integral 1 + k_ext x E_p (validated to ~1% under 16 hogs;
-the probe over-responds there); steal/bandwidth contention (ext reads
-~1 core, brackets uniformly elevated) is corrected by the bracket form
-(two independent refused windows read within 1.2%/1.4% of the quiet
-anchor); a quiet window needs no correction. k_ext (marginal slowdown per external
-busy core) and REF_MC_IDLE (the probe's idle-host time) come from
-``BENCH_ref.json`` — written and re-pinned by
-``tools/load_calibration.py`` (measured hog ladder), auto-refreshed
-with each QUIET run's observed floor, provenance (value, n_cores,
-date, derivation) recorded in every bench record. The r16 bracket-only
-absolute form is retained as ``value_norm_abs_bracket`` for r16
-continuity. The closing-run quiet gate is now CODE, not prose: every
-record carries ``quiet`` (+ ``quiet_reason``), and
+Quiet gate: every record carries ``quiet`` (+ ``quiet_reason``), and
 ``SPARK_GRAFT_BENCH_REQUIRE_QUIET=1`` exits 3 on a non-quiet run after
-persisting the record. ``SPARK_GRAFT_BENCH_ONLY=q1,q2`` restricts the
-registry (re-adjudication runs); subset records are tagged
-``metric: contract_suite_runtime_subset`` so they can never be read as
-suite totals.
+persisting the record. A run is quiet when both legs of
+:func:`quiet_verdict` pass:
 
-Each query is fully executed through the noop sink (computes every row,
-writes nothing) so timings measure the real plan, not a count shortcut.
+- the median in-pass EXTERNAL busy cores, integrated by a 1 Hz /proc
+  sampler (total busy jiffies minus this process tree's — zero Spark
+  work, so it cannot perturb the timed queries), and
+- the median of a fixed-work multi-core probe (:func:`mc_probe_once`),
+  timed before every pass and after the last, against the idle
+  reference from :func:`resolve_ref`. The probe sees contention the
+  jiffies ledger cannot (CPU steal, memory bandwidth).
+
+The reference comes from ``BENCH_ref.json`` when it was measured at this
+run's core count (quiet runs refresh it), else from a pin at 32 cores;
+at any other core count the run's own probe floor stands in and the
+record says so (``ref_mc.source == "unavailable"``).
 """
 
 from __future__ import annotations
@@ -134,30 +90,6 @@ def robust_stat(vals: list[float]) -> float:
     return vals[0]
 
 
-def load_normalize(samples: dict[str, list[float]],
-                   sample_pass: dict[str, list[int]],
-                   cal: list[float],
-                   ref: float | None = None) -> dict[str, float]:
-    """Pure normalization core (module-level so the unit suite can pin
-    the math): pass ``p`` is bracketed by calibration samples ``cal[p]``
-    and ``cal[p+1]``; each raw sample is rescaled by
-    ``ref / min(bracket)`` — toward the run's least-loaded state with
-    ``ref=None`` (min of ``cal``; the r12 relative form) or toward an
-    idle host with an explicit ``ref`` (the r16 absolute form,
-    comparable across windows). First-order CPU-steal correction, not a
-    throughput model."""
-    ref = min(cal) if ref is None else ref
-
-    def bracket(p: int) -> float:
-        return min(cal[p], cal[min(p + 1, len(cal) - 1)])
-
-    return {name: round(robust_stat([v * ref / bracket(p)
-                                     for v, p in zip(samples[name],
-                                                     sample_pass[name])]),
-                        3)
-            for name in samples}
-
-
 def external_busy_cores(series: list[tuple[float, float, float]],
                         t0: float, t1: float,
                         clk: float = 100.0) -> float | None:
@@ -182,65 +114,21 @@ def external_busy_cores(series: list[tuple[float, float, float]],
     return max(0.0, ext / dt / clk)
 
 
-def pass_slowdowns(cal: list[float], ref: float,
-                   ext_per_pass: list[float | None],
-                   k_ext: float) -> list[float]:
-    """Per-pass slowdown factor s_p for the absolute normalization
-    (round 17, verdict #1): ``1 + k_ext * E_p`` where E_p is the
-    measured external-busy-core INTEGRAL over the pass and k_ext the
-    suite's calibrated marginal slowdown per external core
-    (tools/load_calibration.py --suite-fit). The integral cannot miss
-    CPU load between samples the way the r16 point brackets could
-    (jiffies deltas capture every burst exactly) — that was the
-    window-B under-correction. The brackets are deliberately NOT in
-    the correction anymore: the r17 calibration measured the tiny
-    probe OVER-responding to spin load (brackets 1.48x while the
-    12-query suite subset slowed 1.14x at the same E=16), so a
-    max(bracket, series) combine would over-correct by ~25% under
-    exactly the loads it was built for. The probe's job is DETECTION —
-    it still gates :func:`quiet_verdict` and is recorded as
-    ``value_norm_abs_bracket`` — because it sees non-CPU contention
-    (memory bandwidth, I/O stalls) the jiffies ledger can't; such a
-    window is flagged non-quiet rather than mis-corrected. Bracket
-    fallback applies only when the sampler produced no series for the
-    pass. Floored at 1.0. Pure."""
-    out = []
-    for p, ext in enumerate(ext_per_pass):
-        if ext is None:
-            bracket = min(cal[p], cal[min(p + 1, len(cal) - 1)]) / ref
-            out.append(max(1.0, bracket))
-        else:
-            out.append(max(1.0, 1.0 + k_ext * ext))
-    return out
-
-
-def normalize_by_pass(samples: dict[str, list[float]],
-                      sample_pass: dict[str, list[int]],
-                      s: list[float]) -> dict[str, float]:
-    """Per-query robust stat with each raw sample divided by its pass's
-    slowdown factor ``s[p]`` — the round-17 absolute normalization
-    core. Pure (unit-pinned beside :func:`load_normalize`)."""
-    return {name: round(robust_stat([v / s[p]
-                                     for v, p in zip(samples[name],
-                                                     sample_pass[name])]),
-                        3)
-            for name in samples}
-
-
 def quiet_verdict(ext_per_pass: list[float | None],
                   cal_mc: list[float], ref: float,
                   max_ext_cores: float = 1.6,
-                  max_bracket_ratio: float = 1.1) -> tuple[bool, str]:
-    """The closing-run quiet gate, codified (round 17 — r16 kept this
-    discipline in SCALING.md prose): a run is QUIET iff the median
+                  max_bracket_ratio: float = 1.1,
+                  self_relative: bool = False) -> tuple[bool, str]:
+    """The closing-run quiet gate: a run is QUIET iff the median
     in-pass external load is ≤ ``max_ext_cores`` busy cores (default
     1.6 = 5% of 32) AND the median multi-core bracket is ≤
     ``max_bracket_ratio`` x the idle reference. The bracket median is
     taken over the STEADY samples (index ≥ 1) when more than two
     exist: the pre-pass-1 sample structurally runs on a colder
-    JIT/cache state (the r12 spread_steady precedent — it read ~1.4x
-    the steady band in every r17 run despite the discarded warm-up
-    pass) and is a property of session start, not of host load.
+    JIT/cache state and is a property of session start, not of host
+    load. ``self_relative`` marks a ``ref`` that is the run's own probe
+    floor rather than an idle-host reference: a host loaded throughout
+    the run passes the bracket leg then, so the reason says so.
     Returns (quiet, reason). Pure."""
     exts = sorted(e for e in ext_per_pass if e is not None)
     med_ext = exts[len(exts) // 2] if exts else None
@@ -248,83 +136,75 @@ def quiet_verdict(ext_per_pass: list[float | None],
     ratios = sorted(c / ref for c in steady)
     med_ratio = ratios[len(ratios) // 2]
     if med_ext is not None and med_ext > max_ext_cores:
-        return False, (f"median in-pass external load "
-                       f"{med_ext:.2f} cores > {max_ext_cores}")
-    if med_ratio > max_bracket_ratio:
-        return False, (f"median mc bracket {med_ratio:.3f}x idle ref "
-                       f"> {max_bracket_ratio}")
-    return True, "ok"
-
-
-def classify_load(ext_per_pass: list[float | None],
-                  cal_mc: list[float], ref: float,
-                  ext_thresh: float = 1.6,
-                  bracket_thresh: float = 1.1) -> tuple[str, float | None,
-                                                        float]:
-    """Window load classification (round 17, second iteration): the
-    2x2 the round's refused/validated windows measured out. Spin/CPU
-    load is VISIBLE to the jiffies ledger and the series integral
-    corrects it to ~1% (window-B validation) while the fixed-work
-    probe over-responds (1.48x bracket at a 1.14x suite); steal/
-    bandwidth contention is INVISIBLE to guest jiffies (ext reads
-    ~1 core) but the probe tracks it almost exactly — two independent
-    gate-refused steal windows read value_norm_abs_bracket within
-    1.2%/1.4% of the quiet anchor (SCALING.md "Two load classes, two
-    correctors"). So: median ext >= ``ext_thresh`` -> "spin" (series
-    corrects); else median steady bracket > ``bracket_thresh`` ->
-    "steal" (brackets correct); else "quiet" (both ~1, series form
-    kept). Returns (class, median_ext, median_bracket_ratio); medians
-    computed exactly as :func:`quiet_verdict` computes them. Pure."""
-    exts = sorted(e for e in ext_per_pass if e is not None)
-    med_ext = exts[len(exts) // 2] if exts else None
-    steady = cal_mc[1:] if len(cal_mc) > 2 else cal_mc
-    ratios = sorted(c / ref for c in steady)
-    med_ratio = ratios[len(ratios) // 2]
-    if med_ext is not None and med_ext >= ext_thresh:
-        return "spin", med_ext, med_ratio
-    if med_ratio > bracket_thresh:
-        return "steal", med_ext, med_ratio
-    return "quiet", med_ext, med_ratio
+        quiet, reason = False, (f"median in-pass external load "
+                                f"{med_ext:.2f} cores > {max_ext_cores}")
+    elif med_ratio > max_bracket_ratio:
+        quiet, reason = False, (f"median mc bracket {med_ratio:.3f}x "
+                                f"idle ref > {max_bracket_ratio}")
+    else:
+        quiet, reason = True, "ok"
+    if self_relative:
+        reason += " (self-relative floor)"
+    return quiet, reason
 
 
 def resolve_ref(ref_file: dict | None, n_cores: int,
-                pinned_ref: float = 0.21,
-                pinned_k: float = 0.055) -> dict:
-    """REF_MC_IDLE / k_ext resolution with provenance (round 17,
-    verdict #2; graceful degradation round 18, verdict #1): prefer
-    ``BENCH_ref.json`` (written by tools/load_calibration.py, refreshed
-    by quiet runs) when present AND measured at this run's probe
-    partition count — the probe's fixed work is defined by n_cores, so
-    a mismatched-probe reference is not comparable (round-17 ADVICE);
-    fall back to the hand-pinned r16 constants at n_cores=32. At any
-    OTHER core count with no matching reference, return
+                pinned_ref: float = 0.21) -> dict:
+    """Idle reference for the multi-core probe, with provenance: prefer
+    ``BENCH_ref.json`` (refreshed by quiet runs) when present AND
+    measured at this run's probe partition count — the probe's fixed
+    work is defined by n_cores, so a mismatched-probe reference is not
+    comparable; fall back to the hand-pinned constant at n_cores=32. At
+    any OTHER core count with no matching reference, return
     ``value: None, source: "unavailable"`` — the caller substitutes the
-    run's own probe floor (relative-only normalization) and the run
-    STILL completes and prints its record. The previous behavior
-    (assert n_cores == 32) executed the whole suite at
-    ``SPARK_GRAFT_CPUS=8`` and then died before printing any JSON,
-    blinding the driver's scaling measurement (BENCH_r17_c8.json).
-    Returns {value, k_ext, n_cores, source, date}. Pure."""
+    run's own probe floor and the run still completes and prints its
+    record. Returns {value, n_cores, source, date}. Pure."""
     if ref_file and ref_file.get("n_cores") == n_cores \
             and isinstance(ref_file.get("ref_mc_idle"), (int, float)):
         return {"value": float(ref_file["ref_mc_idle"]),
-                "k_ext": float(ref_file.get("k_ext", pinned_k)),
                 "n_cores": n_cores, "source": "BENCH_ref.json",
                 "date": ref_file.get("date")}
     if n_cores == 32:
-        return {"value": pinned_ref, "k_ext": pinned_k, "n_cores": 32,
+        return {"value": pinned_ref, "n_cores": 32,
                 "source": "pinned-r16", "date": "2026-08-16"}
-    return {"value": None, "k_ext": pinned_k, "n_cores": n_cores,
+    return {"value": None, "n_cores": n_cores,
             "source": "unavailable", "date": None}
 
 
+def refreshed_ref(ref_file: dict | None, n_cores: int,
+                  cal_mc: list[float], date: str) -> dict:
+    """The ``BENCH_ref.json`` a QUIET run writes back: this run's
+    STEADY-median probe reading (index >= 1 — the pre-pass-1 sample is
+    structurally cold) is appended to the recorded quiet readings
+    (bounded history) and the reference re-derived as their median.
+    Median, not min: a min-derived reference sits ~5-8% below the steady
+    band by construction, biasing the bracket ratio toward the gate's
+    limit on an idle host. The history carries over only when
+    ``ref_file`` was measured at this run's ``n_cores``: readings at
+    another probe size are not comparable, so a fresh history starts.
+    Pure."""
+    steady = cal_mc[1:] if len(cal_mc) > 2 else cal_mc
+    this_run = sorted(steady)[len(steady) // 2]
+    if not (ref_file and ref_file.get("n_cores") == n_cores):
+        ref_file = {}
+    hist = (ref_file.get("quiet_samples", []) + [this_run])[-50:]
+    med = sorted(hist)[len(hist) // 2]
+    base = ref_file.get("derivation_base", "pinned-r16 seed")
+    return {"ref_mc_idle": round(med, 4),
+            "n_cores": n_cores,
+            "date": date,
+            "derivation_base": base,
+            "derivation": (f"{base}; median of {len(hist)} "
+                           f"quiet steady-median readings"),
+            "quiet_samples": hist}
+
+
 def mc_probe_once(spark, n_cores: int) -> float:
-    """ONE timing of the fixed-work multi-core calibration probe: a
+    """ONE timing of the fixed-work multi-core probe: a
     ``n_cores``-partition scan -> hash shuffle -> agg shaped like the
     suite's hot loop, saturating every executor thread for a few
-    hundred ms. Module-level so tools/load_calibration.py measures the
-    IDENTICAL work bench normalizes against — a drifting copy of the
-    probe would silently invalidate REF_MC_IDLE/k_ext."""
+    hundred ms. Its idle-host time is a machine constant, which is
+    what the quiet gate's bracket leg compares against."""
     t0 = time.perf_counter()
     spark.range(2_000_000, numPartitions=n_cores) \
         .selectExpr("id", "xxhash64(id) AS h") \
@@ -337,22 +217,16 @@ def mc_probe_once(spark, n_cores: int) -> float:
 class _CpuSampler:
     """1 Hz background sampler of (wall, total_busy_jiffies,
     our_process_tree_jiffies) from /proc — pure observation, no Spark
-    work, so it cannot perturb the timed queries (the r16 alternative,
-    an in-pass fixed-work probe, would steal all 32 threads for ~200 ms
-    per sample and queue behind the running stage, measuring the
-    engine's own load instead of the host's)."""
+    work, so it cannot perturb the timed queries (an in-pass fixed-work
+    probe would steal every executor thread per sample and queue behind
+    the running stage, measuring the engine's own load instead of the
+    host's)."""
 
-    def __init__(self, interval: float = 1.0,
-                 exclude_pids: set[int] | None = None):
+    def __init__(self, interval: float = 1.0):
         import threading
         self.interval = interval
         self.series: list[tuple[float, float, float]] = []
         self.clk = float(os.sysconf("SC_CLK_TCK"))
-        # pids counted as EXTERNAL even though they are our children —
-        # tools/load_calibration.py's synthetic hogs, which must land
-        # on the "other processes" side of the ledger to be measured
-        self.exclude_pids = exclude_pids if exclude_pids is not None \
-            else set()
         self._stop = threading.Event()
         self._thread = threading.Thread(target=self._run, daemon=True)
 
@@ -387,8 +261,6 @@ class _CpuSampler:
         ours, stack = 0.0, [me]
         while stack:
             pid = stack.pop()
-            if pid in self.exclude_pids:
-                continue
             if pid in procs:
                 ours += procs[pid][1]
             stack.extend(kids.get(pid, []))
@@ -450,71 +322,27 @@ def main() -> None:
         # iterative ones hold loop-invariant checkpoints (edge lists,
         # base relations) as plan leaves; once timed and discarded their
         # blocks would otherwise linger in the block manager until JVM
-        # GC and show up as a slowly rising floor across reps (the r9
-        # COVERAGE note) — free them eagerly. deep is safe here because
-        # the whole result tree is dead between reps.
+        # GC and show up as a slowly rising floor across reps — free
+        # them eagerly. deep is safe here because the whole result tree
+        # is dead between reps.
         free_local_checkpoint(df, deep=True)
         return dt
 
-    # Fixed-cost calibration: a 1-row count over the 5-row region table.
-    # Its true cost is ~constant within a run, so first-vs-last drift
-    # measures machine load (CPU steal, co-tenant pressure) independently
-    # of any engine change. Best-of-2 per sample point to shed scheduler
-    # blips from the calibration itself.
-    def calibrate() -> float:
-        def once() -> float:
-            t0 = time.perf_counter()
-            spark.read.parquet(os.path.join(SF_DIR, "region.parquet")) \
-                .groupBy().count().write.format("noop") \
-                .mode("overwrite").save()
-            return time.perf_counter() - t0
-        return round(min(once(), once()), 4)
-
-    # MULTI-CORE calibration (round 16, verdict #1): the single-thread
-    # probe above cannot see 32-core contention — r15's driver window
-    # inflated +9.6% at a MATCHED single-thread calibration because a
-    # co-tenant was competing for cores, not for the one core the probe
-    # used. This probe is a fixed-work parallel leg shaped like the
-    # suite's own hot loop: a 32-partition scan -> hash shuffle -> agg,
-    # saturating every executor thread for a few hundred ms. Its drift
-    # across pass brackets measures whole-machine load the way the
-    # QUERIES experience it, so value_norm (defined against THIS probe
-    # from r16 on; the single-thread samples stay recorded as cal_st)
-    # can distinguish "host got busy" from "engine got slower".
     n_cores = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    cal_mc_windows: list[tuple[float, float]] = []
+    # best-of-2 per bracket to shed scheduler blips from the probe itself
+    def calibrate_mc() -> float:
+        return round(min(mc_probe_once(spark, n_cores),
+                         mc_probe_once(spark, n_cores)), 4)
 
-    def calibrate_mc(record_window: bool = True) -> float:
-        w0 = time.perf_counter()
-        val = round(min(mc_probe_once(spark, n_cores),
-                        mc_probe_once(spark, n_cores)), 4)
-        if record_window:
-            cal_mc_windows.append((w0, time.perf_counter()))
-        return val
-
-    # deadline default 545s measured from PROCESS start (the external
-    # driver kills bench at ~580s from process start): the next pass
-    # starts only if elapsed + 1.5x the last pass's duration fits —
-    # see module docstring (round 11).
     reps_target = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "3")))
     deadline = float(os.environ.get("SPARK_GRAFT_BENCH_DEADLINE", "545"))
-    # Per-PASS calibration brackets (round 12 — two straight rounds of
-    # mid-run drift, r11 verdict #6): calibrate before every pass and
-    # once after the last, so each pass is bracketed by two load samples
-    # and a drifting host is localized to the pass it degraded instead
-    # of smeared across the run.
-    calibrate_mc(record_window=False)  # throwaways: the first runs pay
-    calibrate_mc(record_window=False)  # shuffle/codegen JIT that would
-    # otherwise read as "load" in the pass-0 bracket
-    cal_samples = [calibrate()]
+    calibrate_mc()  # throwaways: the first runs pay shuffle/codegen JIT
+    calibrate_mc()  # that would otherwise read as load in the first bracket
     cal_mc_samples = [calibrate_mc()]
-    # time exactly the driver-facing 128 (rounds-11/12 swaps: RETIRED
-    # stays registered for warmup/tests but is not a registry query)
+    # time exactly the driver-facing registry: RETIRED stays registered
+    # for warmup/tests but is not a registry query
     names = sorted(set(contract.QUERIES) - contract.RETIRED)
-    # SPARK_GRAFT_BENCH_ONLY (round 17): comma-separated subset for
-    # re-adjudication / validation runs; subset records get a distinct
-    # metric name so they can never be read as suite totals.
     only = [s for s in os.environ.get("SPARK_GRAFT_BENCH_ONLY", "")
             .split(",") if s.strip()]
     if only:
@@ -522,7 +350,6 @@ def main() -> None:
         assert not unknown, f"SPARK_GRAFT_BENCH_ONLY unknown: {unknown}"
         names = sorted(set(only))
     samples: dict[str, list[float]] = {n: [] for n in names}
-    sample_pass: dict[str, list[int]] = {n: [] for n in names}
     pass_windows: list[tuple[float, float]] = []
     reps_done = 0
     for rep in range(reps_target):
@@ -530,14 +357,12 @@ def main() -> None:
         # of the same query land minutes apart, so a transient load spike
         # inflates at most one sample of each query instead of all three.
         if rep > 0:
-            cal_samples.append(calibrate())
             cal_mc_samples.append(calibrate_mc())
         pass_t0 = time.perf_counter()
         for name in names:
             if rep > 0 and name.startswith("streaming_"):
                 continue  # fixed-overhead dominated: first-pass sample only
             samples[name].append(run_once(name))
-            sample_pass[name].append(rep)
         reps_done += 1
         pass_windows.append((pass_t0, time.perf_counter()))
         last_pass = time.perf_counter() - pass_t0
@@ -545,47 +370,12 @@ def main() -> None:
         if reps_done < reps_target and \
                 elapsed + 1.5 * last_pass > deadline:
             break  # projected next-pass finish busts the driver timeout
-    cal_samples.append(calibrate())
     cal_mc_samples.append(calibrate_mc())
     sampler.stop()
 
-    robust = robust_stat  # module-level so the unit suite pins the math
-
     for name in names:
-        timings[name] = round(robust(samples[name]), 3)
+        timings[name] = round(robust_stat(samples[name]), 3)
     total = round(sum(timings.values()), 3)
-    # Load-normalized per-query medians (round 12, DIAGNOSTIC — the
-    # headline stays the raw median so round-over-round totals remain
-    # comparable): pass p is bracketed by calibration samples [p] and
-    # [p+1]; each raw sample is rescaled by (least-loaded calibration /
-    # its pass's bracket), i.e. toward what an idle host would have
-    # measured. Round 16 (verdict #1): value_norm is now defined against
-    # the MULTI-CORE brackets — the single-thread probe sat flat through
-    # r15's +9.6% window because 32-core contention doesn't touch a
-    # 1-core probe; the parallel probe experiences load the way the
-    # queries do. The single-thread normalization is kept as
-    # value_norm_st for continuity with r12–r15 records. First-order
-    # correction for CPU steal, not a throughput model — use it to
-    # decide whether a per-query regression tracks host load before
-    # reading it as an engine change.
-    def norm_against(cal: list[float],
-                     ref: float | None = None) -> dict[str, float]:
-        return load_normalize(samples, sample_pass, cal, ref)
-
-    timings_norm = norm_against(cal_mc_samples)
-    timings_norm_st = norm_against(cal_samples)
-    # ABSOLUTE normalization (round 16, instrument upgraded round 17):
-    # min-of-own-run normalization is only as good as the run's
-    # quietest moment — a window that is loaded THROUGHOUT normalizes
-    # to itself and stays incomparable across rounds (the r15 failure
-    # mode). The multi-core probe is FIXED WORK, so its idle-host time
-    # is a machine constant; round 17 combines the probe brackets with
-    # the in-pass external-load integral (see pass_slowdowns) so
-    # sustained load BETWEEN brackets is corrected too (the r16
-    # window-B under-correction). Reference + k_ext resolved from
-    # BENCH_ref.json with provenance (tools/load_calibration.py
-    # re-pins it; quiet runs refresh the floor) — the r16 hand pin
-    # (0.21, measured 2026-08-16 at n_cores=32) is the fallback.
     here_dir = os.path.dirname(os.path.abspath(__file__))
     ref_path = os.path.join(here_dir, "BENCH_ref.json")
     try:
@@ -595,89 +385,42 @@ def main() -> None:
         ref_file = None
     ref_info = resolve_ref(ref_file, n_cores)
     REF_MC_IDLE = ref_info["value"]
-    if REF_MC_IDLE is None:
-        # No idle reference exists for this probe size (round 18,
-        # verdict #1): substitute the run's own probe floor so every
-        # downstream consumer still computes — value_norm_abs is then
-        # RELATIVE (min-of-own-run) rather than absolute, which the
-        # record declares via ref_mc.source == "unavailable". The
-        # contract is "run at $SPARK_GRAFT_CPUS and report", not "run
-        # only where the calibration constant exists".
+    self_relative = REF_MC_IDLE is None
+    if self_relative:
+        # no idle reference exists for this probe size: judge the bracket
+        # leg against the run's own probe floor (declared in the record
+        # via ref_mc.source and quiet_reason) so the run still reports
         REF_MC_IDLE = min(cal_mc_samples)
         ref_info = {**ref_info, "value": round(REF_MC_IDLE, 4)}
-    clk = sampler.clk
-    ext_per_pass = [external_busy_cores(sampler.series, t0, t1, clk)
+    ext_per_pass = [external_busy_cores(sampler.series, t0, t1, sampler.clk)
                     for t0, t1 in pass_windows]
-    ext_brackets = [external_busy_cores(sampler.series, t0, t1, clk)
-                    for t0, t1 in cal_mc_windows]
-    slow = pass_slowdowns(cal_mc_samples, REF_MC_IDLE, ext_per_pass,
-                          ref_info["k_ext"])
-    timings_norm_abs = normalize_by_pass(samples, sample_pass, slow)
-    # r16 continuity: the bracket-only absolute form, so the r17
-    # instrument change is itself measurable record-over-record
-    timings_norm_abs_bracket = norm_against(cal_mc_samples,
-                                            ref=REF_MC_IDLE)
-    # classified corrector (round 17, after two independent steal-class
-    # windows validated the bracket form to 1.2%/1.4%): a window whose
-    # contention the jiffies ledger cannot see (ext ~1 core, brackets
-    # uniformly high) gets the BRACKET-corrected absolute value — the
-    # series form would under-correct it to ~raw; a spin window keeps
-    # the series form (brackets over-respond there). The gate semantics
-    # are unchanged: steal windows still read non-quiet; this makes
-    # their recorded value_norm_abs defensible instead of wrong.
-    load_class, _, _ = classify_load(ext_per_pass, cal_mc_samples,
-                                     REF_MC_IDLE)
-    if load_class == "steal":
-        timings_norm_abs = timings_norm_abs_bracket
     quiet, quiet_reason = quiet_verdict(ext_per_pass, cal_mc_samples,
-                                        REF_MC_IDLE)
-    # mis-pin detection (verdict #2): on a QUIET run the probe floor IS
-    # the idle constant — a pinned reference >20% away from it means
-    # the reference does not describe this host/probe anymore.
+                                        REF_MC_IDLE,
+                                        self_relative=self_relative)
+    # mis-pin detection: on a QUIET run the probe floor IS the idle
+    # constant — a pinned reference >20% away from it means the
+    # reference does not describe this host/probe anymore.
     ref_suspect = bool(quiet and abs(min(cal_mc_samples) / REF_MC_IDLE
                                      - 1.0) > 0.20)
-    # quiet runs refresh the reference: append this run's STEADY-median
-    # probe reading (index >= 1 — the pre-pass-1 sample is structurally
-    # cold) and re-derive ref as the median of recorded quiet readings
-    # (bounded history), keeping calibration (k_ext) and provenance.
-    # MEDIAN-of-steady, not min (round 17, second iteration): a
-    # min-derived reference sits ~5-8% below the steady band by
-    # construction, which biased the quiet gate's bracket ratio to
-    # ~1.05-1.1 on a genuinely idle host and flapped the gate on short
-    # subset runs.
-    # A run with source "unavailable" (non-32-core, no matching ref)
-    # normalized against its OWN floor — writing that floor back as the
-    # machine reference would clobber the 32-core calibration with an
-    # incomparable probe size (round 18, verdict #1).
-    if quiet and ref_info["source"] != "unavailable":
+    # quiet runs refresh the reference; a self-relative run must not, or
+    # its own floor would clobber a reference measured at another probe
+    # size
+    if quiet and not self_relative:
         import datetime
-        steady = cal_mc_samples[1:] if len(cal_mc_samples) > 2 \
-            else cal_mc_samples
-        this_run = sorted(steady)[len(steady) // 2]
-        hist = (ref_file or {}).get("quiet_samples", [])
-        hist = (hist + [this_run])[-50:]
-        med = sorted(hist)[len(hist) // 2]
-        base = (ref_file or {}).get("derivation_base", "pinned-r16 seed")
-        new_ref = {"ref_mc_idle": round(med, 4),
-                   "k_ext": ref_info["k_ext"],
-                   "n_cores": n_cores,
-                   "date": datetime.date.today().isoformat(),
-                   "derivation_base": base,
-                   "derivation": (f"{base}; median of {len(hist)} "
-                                  f"quiet steady-median readings"),
-                   "quiet_samples": hist}
+        new_ref = refreshed_ref(ref_file, n_cores, cal_mc_samples,
+                                datetime.date.today().isoformat())
         try:
             with open(ref_path, "w") as f:
                 json.dump(new_ref, f)
         except OSError:
             pass
-    # Fixed streaming overhead, measured explicitly (r6 verdict #3): a
-    # 1-row no-op query through the SAME staged-parquet -> availableNow
-    # -> memory-sink harness the 7 contract streaming queries use. Its
-    # time is pure session/sink start-stop cost — none of it is
-    # data-proportional — so streaming_total decomposes as
-    # ~7 x streaming_fixed_overhead + data work, and a regression in a
-    # streaming query can be attributed to the right side.
+    # Fixed streaming overhead, measured explicitly: a 1-row no-op query
+    # through the SAME staged-parquet -> availableNow -> memory-sink
+    # harness the 7 contract streaming queries use. Its time is pure
+    # session/sink start-stop cost — none of it is data-proportional —
+    # so streaming_total decomposes as ~7 x streaming_fixed_overhead +
+    # data work, and a regression in a streaming query can be attributed
+    # to the right side.
     from data_engineering_projects_spark.contract.sessions import (
         _run_stream_to_memory)
 
@@ -700,48 +443,18 @@ def main() -> None:
         "value": total,
         "unit": "sec",
         "queries": timings,
-        "queries_norm": timings_norm,
-        "value_norm": round(sum(timings_norm.values()), 3),
-        "queries_norm_st": timings_norm_st,
-        "value_norm_st": round(sum(timings_norm_st.values()), 3),
-        "queries_norm_abs": timings_norm_abs,
-        "value_norm_abs": round(sum(timings_norm_abs.values()), 3),
-        "queries_norm_abs_bracket": timings_norm_abs_bracket,
-        "value_norm_abs_bracket":
-            round(sum(timings_norm_abs_bracket.values()), 3),
-        # self-describing instrument tag (round-17 ADVICE): records with
-        # this field define value_norm against the MULTI-CORE brackets
-        # and value_norm_abs against brackets + in-pass load integral;
-        # r12-r15 records (no tag) used the single-thread probe.
-        "norm_probe": "mc+series+class-v17",
-        "load_class": load_class,
         "ref_mc": {**ref_info, "suspect": ref_suspect},
         "ext_busy_cores": [None if e is None else round(e, 2)
                            for e in ext_per_pass],
-        "ext_busy_cores_brackets": [None if e is None else round(e, 2)
-                                    for e in ext_brackets],
-        "pass_slowdowns": [round(s, 3) for s in slow],
         "quiet": quiet,
         "quiet_reason": quiet_reason,
         "subset": sorted(only) if only else None,
+        # ALL raw samples, for drift forensics
         "spread": {n: [round(v, 3) for v in vs]
                    for n, vs in samples.items()},
         "reps_completed": reps_done,
-        # Protocol note (round 13, closing the r11 "<20% spread" target):
-        # the raw-spread target is SUPERSEDED by per-pass calibration +
-        # load-normalized medians (queries_norm/value_norm, shipped r12)
-        # — host load is measured and divided out rather than required
-        # to be absent. "spread" keeps ALL samples for drift forensics;
         # "spread_steady" excludes the first (pre-pass-1) sample, which
-        # structurally runs on a colder cache/JIT state and dominated
-        # the r12 spread (0.243 vs 0.094-0.116 steady).
-        "calibration": {"first": cal_samples[0], "last": cal_samples[-1],
-                        "samples": cal_samples,
-                        "spread": round(max(cal_samples)
-                                        / min(cal_samples) - 1, 3),
-                        "spread_steady": round(
-                            max(cal_samples[1:]) / min(cal_samples[1:]) - 1,
-                            3) if len(cal_samples) > 2 else None},
+        # structurally runs on a colder cache/JIT state
         "calibration_mc": {"samples": cal_mc_samples,
                            "spread": round(max(cal_mc_samples)
                                            / min(cal_mc_samples) - 1, 3),
@@ -756,17 +469,14 @@ def main() -> None:
         "sf": _sf_from_dir(SF_DIR),
     }
     # The driver records only the LAST ~2000 bytes of stdout and parses
-    # the JSON it finds there; with 128 queries the full dict is ~4 KB,
-    # so a single fat line gets truncated from the left and fails to
-    # parse (BENCH_r02..r05: "parsed": null). Emit the full record first
-    # (and persist it to BENCH_detail.json beside this script for human/
-    # judge consumption), then print a FINAL compact line that always
-    # fits the capture window: headline totals plus as many of the
-    # slowest per-query timings as fit a conservative byte budget.
+    # the JSON it finds there; the full dict is ~4 KB, so a single fat
+    # line would be truncated from the left and fail to parse. Emit the
+    # full record first (and persist it to BENCH_detail.json beside this
+    # script), then print a FINAL compact line that always fits the
+    # capture window: headline totals plus as many of the slowest
+    # per-query timings as fit a conservative byte budget.
     print(json.dumps(full))
-    detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_detail.json")
-    with open(detail_path, "w") as f:
+    with open(os.path.join(here_dir, "BENCH_detail.json"), "w") as f:
         json.dump(full, f)
     compact = {
         "metric": full["metric"],
@@ -778,19 +488,9 @@ def main() -> None:
         "streaming_total": streaming_total,
         "streaming_fixed_overhead": streaming_fixed,
         "reps": reps_done,
-        "cal": cal_samples,
-        "cal_spread": round(max(cal_samples) / min(cal_samples) - 1, 3),
-        "cal_spread_steady": round(
-            max(cal_samples[1:]) / min(cal_samples[1:]) - 1, 3)
-        if len(cal_samples) > 2 else None,
         "cal_mc": cal_mc_samples,
         "cal_mc_spread": round(
             max(cal_mc_samples) / min(cal_mc_samples) - 1, 3),
-        "value_norm": round(sum(timings_norm.values()), 3),
-        "value_norm_st": round(sum(timings_norm_st.values()), 3),
-        "value_norm_abs": round(sum(timings_norm_abs.values()), 3),
-        "norm_probe": "mc+series+class-v17",
-        "load_class": load_class,
         "quiet": quiet,
         "ref_mc_idle": REF_MC_IDLE,
         "ref_mc_source": ref_info["source"],
@@ -808,11 +508,9 @@ def main() -> None:
             break
     print(json.dumps(compact))
     spark.stop()
-    # Codified closing-run gate (round 17, verdict #1): with
-    # SPARK_GRAFT_BENCH_REQUIRE_QUIET=1 a non-quiet run exits 3 AFTER
-    # printing and persisting the record — the data is kept for
-    # forensics, the exit code makes "re-run until quiet" scriptable
-    # instead of a SCALING.md discipline.
+    # With SPARK_GRAFT_BENCH_REQUIRE_QUIET=1 a non-quiet run exits 3
+    # AFTER printing and persisting the record — the data is kept for
+    # forensics, the exit code makes "re-run until quiet" scriptable.
     if os.environ.get("SPARK_GRAFT_BENCH_REQUIRE_QUIET") == "1" \
             and not quiet:
         print(f"NOT QUIET: {quiet_reason}", file=sys.stderr)

@@ -58,7 +58,7 @@ def test_staleness_order_rotates_correctly():
     changed-code queries first within it, (3) then front green queries
     whose implementing module changed since their row (a green row only
     certifies the tree the driver ran on), oldest-row-first, then the
-    rest by age, and (4) fall back to the static list when no
+    rest by age, and (4) keep registry order when no
     correctness files exist — so the ~50-query driver budget always
     lands on the rows that need refreshing."""
     import glob
@@ -115,7 +115,7 @@ def test_staleness_order_rotates_correctly():
 
 def test_staleness_order_falls_back_without_correctness_files(monkeypatch):
     """No CORRECTNESS files (first round / foreign checkout) -> None, and
-    `_ordered` then applies the static _FRONT_R6 list."""
+    `_ordered` then keeps registry order."""
     import glob
 
     import __spark_entry__ as e
@@ -123,17 +123,4 @@ def test_staleness_order_falls_back_without_correctness_files(monkeypatch):
     monkeypatch.setattr(glob, "glob", lambda *a, **k: [])
     assert e._staleness_order(list(contract.QUERIES)) is None
     d = {k: k for k in contract.QUERIES}
-    assert list(e._ordered(d))[:3] == [n for n in e._FRONT_R6 if n in d][:3]
-
-
-def test_front_list_names_are_real_and_unique():
-    """The driver checks ~50 queries per round in `queries()` order, and
-    the front list is how stale driver rows get refreshed. `_ordered`
-    silently skips unknown names, so a typo would quietly drop a query
-    from its rotation slot — pin that every front entry resolves and none
-    repeats (a repeat would waste a driver-check slot)."""
-    import __spark_entry__ as e
-    front = e._FRONT_R6
-    assert len(front) == len(set(front)), "duplicate front entries"
-    unknown = [n for n in front if n not in contract.QUERIES]
-    assert not unknown, f"front entries not in registry: {unknown}"
+    assert list(e._ordered(d)) == list(d)
